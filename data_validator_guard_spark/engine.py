@@ -10,13 +10,18 @@ Reference semantics being rebuilt (SURVEY.md §2.12, §3):
 
 Execution strategy (the part the reference could not have — SURVEY.md §4):
 
-1. **One fused totals scan.** ``groupBy(partition).agg(n_rows, *table-level
-   measures, *row-rule violation counters)`` — every row-level rule's
-   violation count is a ``sum(when(cond,1))`` in the SAME aggregation as the
-   table-level measures (the one good idea in the reference —
-   `maganamed_validation.py:100-134` fuses two checks into one scan — applied
-   universally), so verdicts for row+agg rules cost exactly one pass and
-   Catalyst prunes the read to the union of rule-referenced columns.
+1. **One fused totals scan.** Every table-level measure and every row-level
+   rule's violation counter (a ``sum(when(cond,1))``) compiles once, to a
+   mergeable pair: partial aggregates in ``groupBy(partition, *drift_keys)``
+   over the data, then final ``(n_violations, pass)`` aggregates that
+   re-merge those partials per partition (the one good idea in the
+   reference — `maganamed_validation.py:100-134` fuses two checks into one
+   scan — applied universally). ``drift_keys`` is the first drift rule's
+   (group, bucket), so its current histogram falls out of the same pass;
+   without a drift rule the second aggregation adds no Exchange (its child
+   is already hash-partitioned on ``partition``). Verdicts for row+agg rules
+   cost exactly one pass and Catalyst prunes the read to the union of
+   rule-referenced columns.
 2. **One violation scan, only when violations are sunk.** Row-level violation
    *rows* come from a separate fused pass: an array-of-structs
    ``filter``+``explode`` emits all violating (rule, row) pairs in one
@@ -28,30 +33,38 @@ Execution strategy (the part the reference could not have — SURVEY.md §4):
    (weight = offending-row count per emitted key); verdicts join per-(rule,
    partition) weight sums against the totals. Fragment outputs are small
    (aggregations / anti-joins — never row-level violation rows), so the
-   union is persisted by default and shared between the two outputs.
+   union is persisted and shared between the two outputs;
+   ``operators.dedup.unpersist_intermediates()`` releases it.
 
 Operator choices:
 - **unique**: salted two-phase hash aggregation (north rule): phase 1 groups
-  on (keys, salt) so a hot key's rows spread over many reducers, phase 2
-  merges partial counts. Exact result, skew defused.
+  on (xxhash64(keys), salt) so a hot key's rows spread over many reducers,
+  phase 2 merges partial counts, and the duplicate hashes are verified
+  exactly on the full keys. Exact result, skew defused.
 - **foreign_key**: broadcast left-anti join (`general_validation.py:94-108`
   was a Python set difference).
 - **group_consistency**: exact distinct-count per group — an explicit,
   order-independent tightening of the reference's order-dependent
   ``x == x.iloc[0]`` (`maganamed_validation.py:231-232`; SURVEY.md §7 hard 4).
+- **cardinality_range**: a mergeable HLL sketch over ``xxhash64(c)``
+  (lgK from ``params["rsd"]``) — hashing first counts blank strings like
+  any value and accepts every column type; ``exact=True`` merges per-group
+  ``collect_set`` partials into one exact distinct count.
 - **drift**: the engine's one pandas UDF (Arrow-batched, grouped) — see
   :mod:`data_validator_guard_spark.operators.drift`.
 """
 
 from __future__ import annotations
 
+import math
 from typing import Iterable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from data_validator_guard_spark.functions import is_blank, normalized
+from data_validator_guard_spark.operators.dedup import _track_persist
+from data_validator_guard_spark.operators.drift import bucketize, drift_violations
 from data_validator_guard_spark.rules import (
     AGG_LEVEL_TYPES,
     ROW_LEVEL_TYPES,
@@ -158,33 +171,46 @@ def _row_violation(rule: Rule) -> tuple[Column, Column]:
     raise ValueError(f"not a row-level rule: {t}")
 
 
-def _agg_measures(rule: Rule) -> tuple[Column, Column]:
-    """Compile a table-level rule to (n_violations_expr, pass_expr) aggregates
-    evaluated inside the fused totals pass."""
+def _hll_lg_k(rsd: float) -> int:
+    """HLL ``lgConfigK`` for a target relative standard deviation
+    (rsd ~= 1.04 / sqrt(2^lgK)), clamped to the sketch's [4, 21]."""
+    return min(21, max(4, math.ceil(2 * math.log2(1.04 / rsd))))
+
+
+def _agg_measure(rule: Rule, slot: str, n_rows: Column) -> tuple[list[Column], Column, Column]:
+    """Compile a table-level rule to a mergeable pair: partial aggregates
+    (named ``slot``) over the fine totals grouping, and final
+    ``(n_violations, pass)`` aggregates that merge them per partition.
+    ``n_rows`` is the final per-partition row count."""
     p = rule.params
     t = rule.type
     if t == "null_rate_max":
-        blanks = F.sum(is_blank(rule.columns[0]).cast("bigint"))
-        rate = blanks / F.count(F.lit(1))
-        return blanks, rate <= F.lit(float(p["max_rate"]))
+        partial = F.sum(is_blank(rule.columns[0]).cast("bigint"))
+        blanks = F.sum(slot)
+        return [partial.alias(slot)], blanks, blanks / n_rows <= F.lit(float(p["max_rate"]))
     if t == "min_rows":
-        n = F.count(F.lit(1))
-        ok = n >= F.lit(int(p["n"]))
-        return F.when(ok, F.lit(0)).otherwise(F.lit(1)).cast("bigint"), ok
+        ok = n_rows >= F.lit(int(p["n"]))
+        return [], _fails(ok), ok
     if t == "cardinality_range":
-        exact = p.get("exact", False)
-        card = (
-            F.count_distinct(F.col(rule.columns[0]))
-            if exact
-            else F.approx_count_distinct(F.col(rule.columns[0]), rsd=p.get("rsd", 0.01))
-        )
-        lo = int(p.get("lo", 0))
-        hi = p.get("hi")
-        ok = card >= F.lit(lo)
-        if hi is not None:
-            ok = ok & (card <= F.lit(int(hi)))
-        return F.when(ok, F.lit(0)).otherwise(F.lit(1)).cast("bigint"), ok
+        c = F.col(rule.columns[0])
+        if p.get("exact", False):
+            partial = F.collect_set(c)
+            card = F.size(F.array_distinct(F.flatten(F.collect_list(slot))))
+        else:
+            # hashing first: blank strings count as values (as
+            # approx_count_distinct counts them) and any column type works
+            lg_k = _hll_lg_k(float(p.get("rsd", 0.01)))
+            partial = F.hll_sketch_agg(F.when(c.isNotNull(), F.xxhash64(c)), lg_k)
+            card = F.hll_sketch_estimate(F.hll_union_agg(slot))
+        ok = card >= F.lit(int(p.get("lo", 0)))
+        if p.get("hi") is not None:
+            ok = ok & (card <= F.lit(int(p["hi"])))
+        return [partial.alias(slot)], _fails(ok), ok
     raise ValueError(f"not an agg-level rule: {t}")
+
+
+def _fails(ok: Column) -> Column:
+    return F.when(ok, F.lit(0)).otherwise(F.lit(1)).cast("bigint")
 
 
 # ---------------------------------------------------------------- plan level
@@ -197,16 +223,12 @@ def _unique_violations(df: DataFrame, rule: Rule, part: Column, n_salts: int) ->
     weight = group size, matching the reference's ``duplicated(keep=False)``
     row count (`general_validation.py:19-27`).
 
-    Default mode ``hash``: shuffle only (partition, xxhash64(keys), salt) —
-    8-byte hashes instead of full key strings (at (repo, path, commit) width
-    this cuts the exchange ~6x) — then broadcast the (assumed-few) duplicate
-    hashes back and verify exactly on the matching rows, so hash collisions
-    can only create candidates, never false violations. The salt (physical
-    input split id) spreads a hot key's partial counts across reducers.
-
-    Mode ``shuffle`` (``params={"mode": "shuffle"}``): classic salted
-    two-phase aggregation on the full key — for pathological inputs where
-    duplicates are a large fraction and the hash broadcast would be big.
+    Shuffle only (partition, xxhash64(keys), salt) — 8-byte hashes instead
+    of full key strings (at (repo, path, commit) width this cuts the
+    exchange ~6x) — then broadcast the (assumed-few) duplicate hashes back
+    and verify exactly on the matching rows, so hash collisions can only
+    create candidates, never false violations. The salt (physical input
+    split id) spreads a hot key's partial counts across reducers.
     """
     norm = rule.type == "unique_normalized"
     keyexprs = [
@@ -214,44 +236,29 @@ def _unique_violations(df: DataFrame, rule: Rule, part: Column, n_salts: int) ->
         for i, c in enumerate(rule.columns)
     ]
     keynames = [f"__k{i}" for i in range(len(rule.columns))]
-    mode = rule.params.get("mode", "hash")
-
-    if mode == "hash":
-        hashed = df.select(part.alias("partition"), *keyexprs).select(
-            "partition",
-            *keynames,
-            F.xxhash64(*[F.col(k) for k in keynames]).alias("__h"),
-        )
-        salted = hashed.select("partition", "__h").withColumn(
-            "__salt", F.pmod(F.spark_partition_id(), F.lit(n_salts))
-        )
-        phase1 = salted.groupBy("partition", "__h", "__salt").agg(
-            F.count(F.lit(1)).alias("__c")
-        )
-        dup_h = (
-            phase1.groupBy("partition", "__h")
-            .agg(F.sum("__c").alias("__n"))
-            .filter(F.col("__n") > 1)
-            .select("partition", "__h")
-        )
-        dup_keys = (
-            hashed.join(F.broadcast(dup_h), ["partition", "__h"], "left_semi")
-            .groupBy("partition", *keynames)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > 1)
-        )
-    else:
-        salted = df.select(part.alias("partition"), *keyexprs).withColumn(
-            "__salt", F.pmod(F.spark_partition_id(), F.lit(n_salts))
-        )
-        phase1 = salted.groupBy("partition", *keynames, "__salt").agg(
-            F.count(F.lit(1)).alias("__c")
-        )
-        dup_keys = (
-            phase1.groupBy("partition", *keynames)
-            .agg(F.sum("__c").alias("n"))
-            .filter(F.col("n") > 1)
-        )
+    hashed = df.select(part.alias("partition"), *keyexprs).select(
+        "partition",
+        *keynames,
+        F.xxhash64(*[F.col(k) for k in keynames]).alias("__h"),
+    )
+    salted = hashed.select("partition", "__h").withColumn(
+        "__salt", F.pmod(F.spark_partition_id(), F.lit(n_salts))
+    )
+    phase1 = salted.groupBy("partition", "__h", "__salt").agg(
+        F.count(F.lit(1)).alias("__c")
+    )
+    dup_h = (
+        phase1.groupBy("partition", "__h")
+        .agg(F.sum("__c").alias("__n"))
+        .filter(F.col("__n") > 1)
+        .select("partition", "__h")
+    )
+    dup_keys = (
+        hashed.join(F.broadcast(dup_h), ["partition", "__h"], "left_semi")
+        .groupBy("partition", *keynames)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") > 1)
+    )
     return dup_keys.select(
         F.lit(rule.rule_id).alias("rule_id"),
         F.col("partition"),
@@ -422,11 +429,19 @@ def _group_consistency_violations(df: DataFrame, rule: Rule, part: Column) -> Da
 
 
 # ---------------------------------------------------------------- executor
+def partition_column(partition_by: str) -> Column:
+    """The verdict partition value of a row: ``partition_by`` (a SQL expr)
+    rendered as a string, NULL as ``"__null__"``. Null-safe because verdict
+    and violation counts join on it, and NULL keys would silently drop rows
+    in that join. Ledger resume pruning and snapshot-diff carried verdicts
+    stay correct only while every module renders it through here."""
+    return F.coalesce(F.expr(partition_by).cast("string"), F.lit("__null__"))
+
+
 def validate(
     df: DataFrame,
     suite: RuleSuite,
     n_salts: int = DEFAULT_N_SALTS,
-    persist_violations: bool = True,
     violation_sample_ppm: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Run every rule in ``suite`` over ``df``.
@@ -448,18 +463,17 @@ def validate(
 
     Both are lazy. Verdicts for row- and table-level rules come entirely from
     the single fused totals aggregation — materializing only verdicts never
-    touches the violation-row scan. ``persist_violations=True`` (default)
-    caches the plan-level fragment union (small: aggregation / anti-join /
-    drift outputs — row-level violation rows are NOT in it) so sinking both
-    outputs shares the unique/drift subplans instead of recomputing them;
-    measured ~1.4x faster on the flagship suite at 8M rows. Pass False for
-    verdict-only runs that should leave no cached state, and ``unpersist()``
-    the cached frame in long-lived sessions.
+    touches the violation-row scan. The plan-level fragment union (small:
+    aggregation / anti-join / drift outputs — row-level violation rows are
+    NOT in it) is cached so sinking both outputs shares the unique/drift
+    subplans instead of recomputing them; measured ~1.4x faster on the
+    flagship suite at 8M rows. With a drift rule the fine totals aggregation
+    is cached too (it feeds both the totals and the drift histogram).
+    Long-lived sessions release both caches with
+    ``operators.dedup.unpersist_intermediates()`` once the outputs are sunk.
     """
     spark = df.sparkSession
-    # null-safe partition value: verdict/violation counts join on partition,
-    # and NULL keys would silently drop rows in that join.
-    part = F.coalesce(F.expr(suite.partition_by).cast("string"), F.lit("__null__"))
+    part = partition_column(suite.partition_by)
     keys = (
         F.concat_ws("|", *[F.col(k).cast("string") for k in suite.key_cols])
         if suite.key_cols
@@ -480,9 +494,6 @@ def validate(
     jc_rules = [r for r in suite.rules if r.type == "join_consistency"]
     drift_rules = [r for r in suite.rules if r.type == "drift"]
 
-    # ---- totals scan: n_rows + table-level measures + row-rule violation
-    # counters, all in ONE aggregation pass per partition. Catalyst prunes the
-    # read to the partition expr + the union of rule-referenced columns.
     def _guard(r: Rule, cond: Column) -> Column:
         # Conditional rules: params["where"] (boolean SQL expr) restricts the
         # check to matching rows — "if status='active' then email not null".
@@ -527,91 +538,37 @@ def validate(
         compiled_rows.append((r, _guard(r, cond), detail))
     row_rules = row_rules + fk_inline
 
-    # When exactly one drift rule is present (the north-rule shape), the
-    # totals scan groups by (partition, drift group, length bucket) instead of
-    # partition alone: the drift rule's *current histogram falls out of the
-    # same pass* (no second scan of the heavy value column), and the totals
-    # re-aggregate from the tiny fine-grained result. Requires every measure
-    # to be decomposable — counters re-aggregate by SUM, cardinality switches
-    # from approx_count_distinct to a mergeable HLL sketch
-    # (hll_sketch_agg → hll_union_agg → hll_sketch_estimate). Rules with
-    # exact cardinality fall back to the direct path.
-    fuse_drift = len(drift_rules) == 1 and not any(
-        r.type == "cardinality_range" and r.params.get("exact") for r in agg_rules
-    )
-    drift_cur: DataFrame | None = None
-    if fuse_drift:
-        from data_validator_guard_spark.operators.drift import bucketize
-
-        dr = drift_rules[0]
-        fine_aggs: list[Column] = [F.count(F.lit(1)).alias("__n")]
-        final_aggs: list[Column] = [F.sum("__n").alias("__n_rows")]
-        n_rows_final = F.sum("__n")
-        for i, r in enumerate(agg_rules):
-            p = r.params
-            if r.type == "null_rate_max":
-                fine_aggs.append(
-                    F.sum(is_blank(r.columns[0]).cast("bigint")).alias(f"__f{i}")
-                )
-                blanks = F.sum(f"__f{i}")
-                final_aggs.append(blanks.cast("bigint").alias(f"__v_{r.rule_id}"))
-                final_aggs.append(
-                    (blanks / n_rows_final <= F.lit(float(p["max_rate"]))).alias(
-                        f"__p_{r.rule_id}"
-                    )
-                )
-            elif r.type == "min_rows":
-                ok = n_rows_final >= F.lit(int(p["n"]))
-                final_aggs.append(
-                    F.when(ok, F.lit(0)).otherwise(F.lit(1)).cast("bigint").alias(f"__v_{r.rule_id}")
-                )
-                final_aggs.append(ok.alias(f"__p_{r.rule_id}"))
-            elif r.type == "cardinality_range":
-                fine_aggs.append(F.hll_sketch_agg(F.col(r.columns[0])).alias(f"__f{i}"))
-                card = F.hll_sketch_estimate(F.hll_union_agg(F.col(f"__f{i}")))
-                lo, hi = int(p.get("lo", 0)), p.get("hi")
-                ok = card >= F.lit(lo)
-                if hi is not None:
-                    ok = ok & (card <= F.lit(int(hi)))
-                final_aggs.append(
-                    F.when(ok, F.lit(0)).otherwise(F.lit(1)).cast("bigint").alias(f"__v_{r.rule_id}")
-                )
-                final_aggs.append(ok.alias(f"__p_{r.rule_id}"))
-            else:  # pragma: no cover - AGG_LEVEL_TYPES is closed
-                raise ValueError(f"not an agg-level rule: {r.type}")
-        for r, cond, _detail in compiled_rows:
-            fine_aggs.append(
-                F.sum(F.when(cond, F.lit(1)).otherwise(F.lit(0))).cast("bigint").alias(f"__fv_{r.rule_id}")
-            )
-            final_aggs.append(F.sum(f"__fv_{r.rule_id}").cast("bigint").alias(f"__v_{r.rule_id}"))
-        fine = df.groupBy(
-            part.alias("partition"),
-            F.col(dr.params["group_by"]).alias("__grp"),
-            bucketize(F.expr(dr.params["value"]), dr.params["edges"]).alias("__bucket"),
-        ).agg(*fine_aggs)
-        # the fine histogram feeds BOTH totals and the drift fragment; persist
-        # it only when the caller wants shared/cached state (same contract as
-        # the fragment union below) — verdict-only runs leave no cached RDDs.
-        if persist_violations:
-            fine = fine.persist(StorageLevel.MEMORY_AND_DISK)
-        totals = fine.groupBy("partition").agg(*final_aggs)
-        drift_cur = fine.select(
-            "partition",
-            F.col("__grp").alias("grp"),
-            F.col("__bucket").alias("bucket"),
-            F.col("__n").alias("n"),
+    # ---- totals: n_rows + table-level measures + row-rule violation
+    # counters in ONE scan. Each measure is a mergeable pair: partials over
+    # (partition, *drift_keys), finals re-merging them per partition. With a
+    # drift rule, drift_keys = its (group, length bucket): its current
+    # histogram falls out of the same pass (no second scan of the heavy
+    # value column). Catalyst prunes the read to the partition expr + the
+    # union of rule-referenced columns.
+    n_rows = F.sum("__n")
+    partials: list[Column] = [F.count(F.lit(1)).alias("__n")]
+    finals: list[Column] = [n_rows.alias("__n_rows")]
+    for i, r in enumerate(agg_rules):
+        rule_partials, nv, ok = _agg_measure(r, f"__f{i}", n_rows)
+        partials += rule_partials
+        finals += [nv.alias(f"__v_{r.rule_id}"), ok.alias(f"__p_{r.rule_id}")]
+    for i, (r, cond, _detail) in enumerate(compiled_rows):
+        partials.append(
+            F.sum(F.when(cond, F.lit(1)).otherwise(F.lit(0))).cast("bigint").alias(f"__fv{i}")
         )
-    else:
-        aggs: list[Column] = [F.count(F.lit(1)).alias("__n_rows")]
-        for r in agg_rules:
-            n_viol, ok = _agg_measures(r)
-            aggs.append(n_viol.alias(f"__v_{r.rule_id}"))
-            aggs.append(ok.alias(f"__p_{r.rule_id}"))
-        for r, cond, _detail in compiled_rows:
-            aggs.append(
-                F.sum(F.when(cond, F.lit(1)).otherwise(F.lit(0))).cast("bigint").alias(f"__v_{r.rule_id}")
-            )
-        totals = df.groupBy(part.alias("partition")).agg(*aggs)
+        finals.append(F.sum(f"__fv{i}").cast("bigint").alias(f"__v_{r.rule_id}"))
+    drift_keys: list[Column] = []
+    if drift_rules:
+        dr = drift_rules[0].params
+        drift_keys = [
+            F.col(dr["group_by"]).alias("grp"),
+            bucketize(F.expr(dr["value"]), dr["edges"]).alias("bucket"),
+        ]
+    fine = df.groupBy(part.alias("partition"), *drift_keys).agg(*partials)
+    if drift_rules:
+        # the fine histogram feeds BOTH totals and the first drift fragment
+        fine = _track_persist(fine)
+    totals = fine.groupBy("partition").agg(*finals)
 
     # ---- violations: one fused scan for all row-level rules (executed only
     # when the violations output is sunk), plus one fragment per plan-level
@@ -648,17 +605,17 @@ def validate(
         fragments.append(_group_consistency_violations(df, r, part))
     for r in jc_rules:
         fragments.append(_join_consistency_violations(df, r, part, keys))
-    for r in drift_rules:
-        from data_validator_guard_spark.operators.drift import drift_violations
-
-        fragments.append(drift_violations(df, r, part, cur=drift_cur))
+    for i, r in enumerate(drift_rules):
+        # the first drift rule reads the fine histogram; others build their own
+        cur = fine.select("partition", "grp", "bucket", F.col("__n").alias("n")) if i == 0 else None
+        fragments.append(drift_violations(df, r, part, cur=cur))
 
     empty_w = spark.createDataFrame(
         [], "rule_id string, partition string, keys string, detail string, weight bigint"
     )
     plan_weighted = _union_all(fragments, empty_w)
-    if persist_violations and fragments:
-        plan_weighted = plan_weighted.persist(StorageLevel.MEMORY_AND_DISK)
+    if fragments:
+        plan_weighted = _track_persist(plan_weighted)
     weighted = (
         row_fragment.select(*empty_w.columns).unionByName(plan_weighted)
         if row_fragment is not None

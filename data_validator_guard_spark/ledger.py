@@ -30,7 +30,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_validator_guard_spark.engine import validate
+from data_validator_guard_spark.engine import partition_column, validate
 from data_validator_guard_spark.rules import RuleSuite
 
 LEDGER_SCHEMA = (
@@ -91,7 +91,7 @@ def run_with_ledger(
     violations_path = os.path.join(out_dir, "violations")
 
     done = done_partitions(spark, ledger_path, snapshot_id, rule_version)
-    part = F.coalesce(F.expr(suite.partition_by).cast("string"), F.lit("__null__"))
+    part = partition_column(suite.partition_by)
     pending = df.filter(~part.isin(done)) if done else df
 
     # violation_sample_ppm bounds the EMITTED violation rows (engine.validate

@@ -42,9 +42,10 @@ from data_validator_guard_spark.operators.text import normalize_text
 # a runaway stage.
 DEFAULT_MAX_BUCKET = 10_000
 
-# Intermediates persisted by the near-dup operators, so long-lived sessions
-# can release them after the terminal action (round-2 advice: persists
-# accumulated across repeated operator calls with no cleanup hook).
+# Intermediates persisted by the near-dup operators, the similarity and
+# contamination kits, engine.validate and stats.robust_outlier_values, so
+# long-lived sessions can release them after the terminal action (without
+# it, persists accumulate across repeated operator calls).
 # NOTE the disk tier: MEMORY_AND_DISK blocks evicted from memory land on
 # executor DISK and are NOT LRU-evicted — a long batch job that never calls
 # unpersist_intermediates() accumulates spilled blocks until the session
@@ -65,8 +66,8 @@ def _track_persist(df: DataFrame) -> DataFrame:
 
 
 def unpersist_intermediates() -> int:
-    """Unpersist every intermediate frame the dedup operators cached since
-    the last call; returns how many were released. Safe to call anytime —
+    """Unpersist every intermediate frame cached through ``_track_persist``
+    since the last call; returns how many were released. Safe to call anytime —
     results already computed are unaffected (recomputation only happens if a
     returned frame is re-executed afterwards). Thread-safe: concurrent
     callers each release a disjoint subset."""

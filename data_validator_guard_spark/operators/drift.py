@@ -49,6 +49,20 @@ def histogram(
     )
 
 
+def _psi(n_cur: pd.Series, n_base: pd.Series, n_buckets: int) -> float:
+    """Smoothed PSI of two bucket-indexed count vectors, summed in bucket
+    order over the full fixed range -1..n_buckets-1 so absent buckets
+    contribute their epsilon mass deterministically."""
+    tot_c = float(n_cur.sum())
+    tot_b = float(n_base.sum())
+    psi = 0.0
+    for b in range(-1, n_buckets):
+        p = float(n_cur.get(b, 0.0)) / tot_c + EPS if tot_c > 0 else EPS
+        q = float(n_base.get(b, 0.0)) / tot_b + EPS if tot_b > 0 else EPS
+        psi += (p - q) * math.log(p / q)
+    return psi
+
+
 def psi_report(
     current: DataFrame,
     baseline: DataFrame,
@@ -75,19 +89,13 @@ def psi_report(
         grp = pdf["grp"].iloc[0]
         tot_c = float(pdf["n_cur"].sum())
         tot_b = float(pdf["n_base"].sum())
-        psi = 0.0
-        chi2 = 0.0
-        # iterate the full fixed bucket range so absent buckets contribute
-        # their smoothed epsilon mass deterministically.
         by_bucket = pdf.set_index("bucket")
-        for b in range(-1, n_buckets):
-            nc = float(by_bucket["n_cur"].get(b, 0.0))
-            nb = float(by_bucket["n_base"].get(b, 0.0))
-            p = nc / tot_c + EPS if tot_c > 0 else EPS
-            q = nb / tot_b + EPS if tot_b > 0 else EPS
-            psi += (p - q) * math.log(p / q)
-            if tot_b > 0 and tot_c > 0:
-                e = nb * tot_c / tot_b
+        psi = _psi(by_bucket["n_cur"], by_bucket["n_base"], n_buckets)
+        chi2 = 0.0
+        if tot_b > 0 and tot_c > 0:
+            for b in range(-1, n_buckets):
+                nc = float(by_bucket["n_cur"].get(b, 0.0))
+                e = float(by_bucket["n_base"].get(b, 0.0)) * tot_c / tot_b
                 if e > 0:
                     chi2 += (nc - e) ** 2 / e
         return pd.DataFrame(
@@ -230,16 +238,8 @@ def drift_violations(
     def _stat(pdf: pd.DataFrame) -> pd.DataFrame:
         partv = pdf["partition"].iloc[0]
         grp = pdf["grp"].iloc[0]
-        tot_c = float(pdf["n_cur"].sum())
-        tot_b = float(pdf["n_base"].sum())
-        psi = 0.0
         by_bucket = pdf.groupby("bucket")[["n_cur", "n_base"]].sum()
-        for b in range(-1, n_buckets):
-            nc = float(by_bucket["n_cur"].get(b, 0.0))
-            nb = float(by_bucket["n_base"].get(b, 0.0))
-            p_ = nc / tot_c + EPS if tot_c > 0 else EPS
-            q_ = nb / tot_b + EPS if tot_b > 0 else EPS
-            psi += (p_ - q_) * math.log(p_ / q_)
+        psi = _psi(by_bucket["n_cur"], by_bucket["n_base"], n_buckets)
         return pd.DataFrame({"partition": [partv], "grp": [grp], "psi": [psi]})
 
     per_group = joined.groupBy("partition", "__grpk").applyInPandas(

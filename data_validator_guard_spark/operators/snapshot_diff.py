@@ -43,11 +43,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_validator_guard_spark.engine import partition_column, validate
 from data_validator_guard_spark.rules import RuleSuite
-
-def _partition_col(suite_partition_by: str) -> Column:
-    # identical null-safe rendering to engine.validate's partition column
-    return F.coalesce(F.expr(suite_partition_by).cast("string"), F.lit("__null__"))
 
 
 def _canonical_field(df: DataFrame, c: str) -> Column:
@@ -108,7 +105,7 @@ def partition_fingerprints(
     img = _row_image(df, fingerprint_cols)
     lo = F.conv(F.substring(img, 1, 12), 16, 10).cast("bigint").cast("decimal(38,0)")
     hi = F.conv(F.substring(img, 13, 12), 16, 10).cast("bigint").cast("decimal(38,0)")
-    return df.groupBy(_partition_col(partition_by).alias("partition")).agg(
+    return df.groupBy(partition_column(partition_by).alias("partition")).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(lo).alias("fp_lo"),
         F.sum(hi).alias("fp_hi"),
@@ -234,15 +231,13 @@ def incremental_validate_full(
     input filter is an ``isin`` over literal changed-partition values —
     prunable at the scan when the partition expression is physical.
     """
-    from data_validator_guard_spark.engine import validate
-
     cols = list(fingerprint_cols) if fingerprint_cols else list(new_df.columns)
     changed = changed_partitions(
         partition_fingerprints(old_df, suite.partition_by, cols),
         partition_fingerprints(new_df, suite.partition_by, cols),
         max_partitions=max_partitions,
     )
-    part = _partition_col(suite.partition_by)
+    part = partition_column(suite.partition_by)
     # only user-supplied frames need the guards: an inline-computed prior
     # shares the suite by construction.
     if prior_violations is not None:
@@ -333,7 +328,7 @@ def incremental_column_stats(
     )
     if not changed:
         return carried
-    part = _partition_col(partition_by)
+    part = partition_column(partition_by)
     fresh = partial_column_stats(
         new_df.filter(part.isin(changed)), list(columns), partition_by
     )

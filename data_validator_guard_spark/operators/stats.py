@@ -18,7 +18,9 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_validator_guard_spark.engine import partition_column
 from data_validator_guard_spark.functions import is_blank
+from data_validator_guard_spark.operators.dedup import _track_persist
 
 
 def column_stats(
@@ -398,7 +400,7 @@ def partition_outlier_report(
     re-aggregate broadcast back — the partials frame is partition-count
     sized, so the second pass is free; nothing re-reads the input.
     """
-    part = F.coalesce(F.expr(partition_by).cast("string"), F.lit("__null__"))
+    part = partition_column(partition_by)
     v = F.expr(value) if isinstance(value, str) else value
     vt = df.select(v.alias("__v")).schema[0].dataType.simpleString()
     if vt in ("double", "float") or (
@@ -809,7 +811,7 @@ def correlation_profile(
     def D(c: Column) -> Column:
         return c.cast("decimal(38,0)")
 
-    part = F.coalesce(F.expr(partition_by).cast("string"), F.lit("__null__"))
+    part = partition_column(partition_by)
     aggs = []
     pairs = [
         (cols[i], cols[j]) for i in range(len(cols)) for j in range(i + 1, len(cols))
@@ -882,10 +884,10 @@ def robust_outlier_values(
 
     Scale shape: ONE scan aggregates to the (group, value) count histogram
     (persisted — reused by the median pass, the deviation histogram, and
-    the verdict join); the deviation histogram is DERIVED from it by
-    arithmetic, not a rescan; every window runs over histogram rows
-    (|group| x |distinct values|), and the median/MAD frames are
-    group-sized broadcast joins. NULL values are excluded (no rank).
+    the verdict join; ``dedup.unpersist_intermediates()`` releases it);
+    the deviation histogram is DERIVED from it by arithmetic, not a
+    rescan; every window runs over histogram rows (|group| x |distinct
+    values|), and the median/MAD frames are group-sized broadcast joins. NULL values are excluded (no rank).
     MAD = 0 (over half the group identical) flags ANY deviating value —
     the correct degenerate reading of a zero robust spread.
     """
@@ -901,7 +903,7 @@ def robust_outlier_values(
     )
     # reused by the median pass, the deviation histogram, and the verdict
     # join — without the persist each reference re-runs the data scan
-    hist = hist.persist()
+    hist = _track_persist(hist)
 
     def _t1_median(h: DataFrame, key: str, alias: str) -> DataFrame:
         w = (

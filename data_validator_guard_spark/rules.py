@@ -47,8 +47,10 @@ join_consistency    rows joined against ``params["other"]`` on
                     optionally violate via ``params["require_match"]``
 null_rate_max       table-level: fraction of blanks <= ``params["max_rate"]``
 min_rows            table-level: partition must contain >= ``params["n"]`` rows
-cardinality_range   table-level: approx distinct count of column within
-                    [lo, hi] (A6 at scale → approx_count_distinct)
+cardinality_range   table-level: distinct count of column within [lo, hi]
+                    (A6 at scale → a mergeable HLL sketch over
+                    ``xxhash64(col)``, lgK from ``params["rsd"]``, default
+                    0.01; ``params["exact"]=True`` counts exactly)
 drift               distribution drift vs a baseline histogram (PSI /
                     chi-square), the engine's one pandas UDF (§2.10)
 ==================  =========================================================

@@ -217,10 +217,13 @@ def test_validate_many_and_empty_table_semantics(spark):
 
 
 def test_fused_drift_totals_matches_fallback(spark):
-    """The (partition, group, bucket) fused totals path must be invisible:
-    identical verdicts whether drift shares the totals scan (approx
-    cardinality -> HLL) or runs the direct path (exact cardinality forces
-    the fallback)."""
+    """Totals keyed by the drift rule's (group, bucket) must be invisible:
+    identical verdicts with and without a drift rule, and for approximate
+    (HLL sketch) vs exact cardinality — including a blank-string value (the
+    sketch hashes first, so "" counts like approx_count_distinct counts it)
+    and a DATE column (any type, not only the sketch's native inputs)."""
+    import datetime
+
     from pyspark.sql import functions as F
 
     from data_validator_guard_spark.engine import validate
@@ -228,42 +231,107 @@ def test_fused_drift_totals_matches_fallback(spark):
     from data_validator_guard_spark.rules import Rule, RuleSuite
 
     rows = [
-        (i, "g" + str(i % 3), "x" * (10 + (i * 7) % 50), None if i % 10 == 0 else "v")
+        (
+            i,
+            "g" + str(i % 3),
+            "x" * (10 + (i * 7) % 50),
+            None if i % 10 == 0 else "v",
+            ("a", "b", "")[i % 3],
+            datetime.date(2024, 1, 1 + i % 4),
+        )
         for i in range(300)
     ]
-    df = spark.createDataFrame(rows, "id long, grp string, content string, v string")
+    df = spark.createDataFrame(
+        rows, "id long, grp string, content string, v string, s string, d date"
+    )
     edges = [0.0, 20.0, 40.0, 60.0]
     baseline = histogram(df, "grp", F.length("content"), edges)
+    drift = Rule(
+        "len_drift",
+        "drift",
+        ("content",),
+        {
+            "group_by": "grp",
+            "value": "length(content)",
+            "edges": edges,
+            "baseline": baseline,
+            "threshold": 10.0,  # high: no violations either way
+        },
+    )
 
-    def mk_suite(exact: bool) -> RuleSuite:
-        return RuleSuite(
+    def verdicts(exact: bool, with_drift: bool) -> dict:
+        suite = RuleSuite(
             "fuse",
             [
                 Rule("v_not_blank", "not_blank", ("v",)),
                 Rule("grp_card", "cardinality_range", ("grp",), {"lo": 1, "hi": 10, "exact": exact}),
+                # per partition (id % 2): s holds {"a", "b", ""}, d two dates
+                Rule("s_card", "cardinality_range", ("s",), {"lo": 3, "hi": 3, "exact": exact}),
+                Rule("d_card", "cardinality_range", ("d",), {"lo": 2, "hi": 2, "exact": exact}),
                 Rule("null_rate", "null_rate_max", ("v",), {"max_rate": 0.5}),
-                Rule(
-                    "len_drift",
-                    "drift",
-                    ("content",),
-                    {
-                        "group_by": "grp",
-                        "value": "length(content)",
-                        "edges": edges,
-                        "baseline": baseline,
-                        "threshold": 10.0,  # high: no violations either way
-                    },
-                ),
+                *([drift] if with_drift else []),
             ],
+            partition_by="id % 2",
             key_cols=("id",),
         )
+        v, _ = validate(df, suite)
+        return {
+            (r.rule_id, r.partition): (r["pass"], r.n_rows, r.n_violations)
+            for r in v.collect()
+            if r.rule_id != "len_drift"
+        }
 
-    v_fused, _ = validate(df, mk_suite(exact=False))     # fused path
-    v_direct, _ = validate(df, mk_suite(exact=True))     # fallback path
-    fused = {(r.rule_id): (r["pass"], r.n_rows, r.n_violations) for r in v_fused.collect()}
-    direct = {(r.rule_id): (r["pass"], r.n_rows, r.n_violations) for r in v_direct.collect()}
-    assert fused == direct
-    assert fused["v_not_blank"] == (False, 300, 30)
+    exact = verdicts(exact=True, with_drift=False)
+    for approx in (False, True):
+        for with_drift in (False, True):
+            assert verdicts(exact=not approx, with_drift=with_drift) == exact
+    assert exact[("s_card", "0")] == exact[("s_card", "1")] == (True, 150, 0)
+    assert exact[("d_card", "0")] == exact[("d_card", "1")] == (True, 150, 0)
+    assert exact[("v_not_blank", "0")] == (False, 150, 30)
+    assert exact[("v_not_blank", "1")] == (True, 150, 0)
+
+
+def test_validate_caches_released_by_unpersist_intermediates(spark):
+    """The frames validate caches — the drift-keyed totals and the
+    plan-level fragment union — are released by ONE
+    unpersist_intermediates() call once both outputs are sunk."""
+    from pyspark.sql import functions as F
+
+    from data_validator_guard_spark.operators import dedup
+    from data_validator_guard_spark.operators.drift import histogram
+
+    df = spark.createDataFrame(
+        [(i % 50, "g" + str(i % 3), "x" * (i % 40)) for i in range(200)],
+        "id long, grp string, content string",
+    )
+    edges = [0.0, 10.0, 20.0]
+    suite = RuleSuite(
+        "cache",
+        [
+            Rule("id_unique", "unique", ("id",)),
+            Rule(
+                "len_drift",
+                "drift",
+                ("content",),
+                {
+                    "group_by": "grp",
+                    "value": "length(content)",
+                    "edges": edges,
+                    "baseline": histogram(df, "grp", F.length("content"), edges),
+                },
+            ),
+        ],
+        key_cols=("id",),
+    )
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    dedup.unpersist_intermediates()
+    before = persistent().size()
+    verdicts, violations = validate(df, suite)
+    verdicts.collect()
+    violations.count()
+    assert persistent().size() == before + 2
+    assert dedup.unpersist_intermediates() == 2
+    assert persistent().size() == before
 
 
 def test_inline_fk_null_dim_rows_still_counts_violations(spark):
@@ -499,7 +567,7 @@ def test_depends_on_gated_execution(spark):
         partition_by="part",
         key_cols=("id",),
     )
-    verdicts, violations = validate(df, suite, persist_violations=False)
+    verdicts, violations = validate(df, suite)
     v = {(r.rule_id, r.partition): r for r in verdicts.collect()}
     assert v[("gate", "p1")]["pass"] is False
     assert v[("b_not_null", "p1")]["pass"] is None
